@@ -1,16 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility (round 15): dump `.explain("formatted")` for named
   * declared queries to files — the plan evidence the optimization
   * rounds commit under plans/rN/ (judge checks plan claims against
   * these instead of running Spark).
   *
   * `runMain graft.ExplainDump <outDir> <suffix> q_a,q_b[,...] [dataDir]`
-  * writes `<outDir>/<query>_<suffix>.txt` per query. Session config
-  * mirrors Bench (local[$SPARK_GRAFT_CPUS], AQE initialPartitionNum
-  * 512) so the dumped initial plans match what the bench executes. */
+  * writes `<outDir>/<query>_<suffix>.txt` per query. The session is
+  * Bench's ([[Harness.builder]]), so the dumped initial plans match what
+  * the bench executes. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val outDir = new java.io.File(args(0))
@@ -18,13 +16,7 @@ object ExplainDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
     outDir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Harness.withStallTolerances(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = Harness.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_EXPLAIN_FINAL=1 executes the query first so the dump
     // shows the POST-AQE final plan (isFinalPlan=true) — the evidence tier

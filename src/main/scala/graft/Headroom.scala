@@ -93,25 +93,17 @@ object Headroom {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft-sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // G1-stall heartbeat/network tolerances ride the shared helper
-    // ([[Harness.withStallTolerances]] — round-13 finding, now applied
-    // to all three measurement harnesses).
-    val spark = Harness.withStallTolerances(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Size-driven partitioning for the big-replica runs: a fixed 32
-      // shuffle partitions puts ~2M-row hash-aggregate tasks on the 100×
-      // replica (execution-memory OOM on the PageRank edge distinct);
+    val spark = Harness.builder()
+      // Size-driven partitioning for the big-replica runs: one shuffle
+      // partition per core (32 when this was measured) puts ~2M-row
+      // hash-aggregate tasks on the 100× replica (execution-memory OOM
+      // on the PageRank edge distinct);
       // with a high initial partition count AQE coalesces DOWN to the
       // right size instead of being stuck too coarse — exactly the
       // production config a real 100 TB job runs with. Small-SF plans
       // coalesce back to a handful of partitions, so sf0.1 timings are
       // unaffected.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Config contract, measured in round 8: the 100× replica's iterative

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** ANN quality-at-scale probe (round-10, VERDICT item 4): the scale
   * story so far certifies COST linearity (bucketed, not all-pairs) but
   * not retrieval QUALITY under the adaptive widths, which change with
@@ -28,16 +26,14 @@ object RecallProbe {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft-sf1", "/tmp/graft-sf10x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Harness.builder()
+      // replica-scale partitioning: see Headroom.main
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // The Sim operators below are called directly, not through
+    // SparkEntry.queries, so the session needs the native functions.
+    GraftExtensions.install(spark)
 
     dirs.foreach { d =>
       val nVec = spark.read.parquet(s"$d/embeddings.parquet").count()

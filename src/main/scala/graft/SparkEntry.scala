@@ -39,9 +39,13 @@ object SparkEntry {
     (multimodal.Multimodal.queries, multimodal.Multimodal.oracle)
   )
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * first installs [[GraftExtensions]] into the session, so a query's
+    * plan never depends on which queries ran before it. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.map(_._1).reduce(_ ++ _).map { case (name, q) =>
+      name -> { (s: SparkSession, d: String) => GraftExtensions.install(s); q(s, d) }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -62,13 +62,7 @@ object SynthEmb {
       else Seq("/tmp/graft-synth-base" -> 2000L,
         "/tmp/graft-synth-10x" -> 20000L,
         "/tmp/graft-synth-100x" -> 200000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     sizes.foreach { case (dir, n) =>
       generate(spark, n, dir)

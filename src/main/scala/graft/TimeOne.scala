@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: steady-state timing for ONE declared query
   * (`runMain graft.TimeOne q_name [dir]`, dir default sf0.1) — the
   * per-query drill-down Bench's full-suite sweep is too coarse for.
@@ -9,16 +7,12 @@ import org.apache.spark.sql.SparkSession
   * times 3 reps on the target dir: rep1 is the COLD number for
   * memo-leaf queries (fresh JVM, dir-keyed memos empty), reps 2–3 the
   * warm reads — both sides of the standing leaf measurement semantics.
-  * Replica dirs (/tmp/graft-sf1, /tmp/graft-sf10x) work as `dir`;
-  * 100× runs want SPARK_DRIVER_MEM=24g like Headroom. */
+  * The session is Bench's ([[Harness.builder]]), so the numbers are
+  * graded-config numbers. Replica dirs (/tmp/graft-sf1, /tmp/graft-sf10x)
+  * work as `dir`; 100× runs want SPARK_DRIVER_MEM=24g like Headroom. */
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val spark = Harness.withStallTolerances(
-      SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = Harness.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(args(0))
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -671,81 +670,4 @@ case class PackedPairs(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object VectorExprs {
-  /** Register `vec_dot`, `minhash_sigs` and `haversine_km` in the
-    * session's function registry so query code can use them via
-    * expr(...). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lg_micro", exprs => LgMicro(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "haversine_km",
-      exprs => HaversineKm(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimHashSig(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "packed_pairs", exprs => PackedPairs(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lang_trigram_scores", exprs =>
-        LangTrigramScores(exprs(0), graft.operators.Text.langProfiles),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_ngrams", { exprs =>
-        val n = exprs(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              s"char_ngrams: n must be an INT literal, got $other")
-          }
-          case e => throw new IllegalArgumentException(
-            s"char_ngrams: n must be a foldable INT literal, got ${e.sql}")
-        }
-        CharNgrams(exprs(0), n)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs", { exprs =>
-        // Checked foldable-literal extraction: a non-integer perm count
-        // (e.g. written as 32L or a column) must fail analysis with a
-        // real message, not a ClassCastException from a blind cast.
-        val n = exprs(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              "minhash_sigs: numPerms must be an INT literal, got " +
-                s"$other (${e.dataType.simpleString})")
-          }
-          case e => throw new IllegalArgumentException(
-            "minhash_sigs: numPerms must be a foldable INT literal, got " +
-              e.sql)
-        }
-        MinHashSigs(exprs(0), n)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_minhash_sigs", { exprs =>
-        val n = exprs(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              "md5_minhash_sigs: numPerms must be an INT literal, got " +
-                s"$other (${e.dataType.simpleString})")
-          }
-          case e => throw new IllegalArgumentException(
-            "md5_minhash_sigs: numPerms must be a foldable INT literal, got " +
-              e.sql)
-        }
-        Md5MinHashSigs(exprs(0), n)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wavg_cents", exprs =>
-        WeightedAvgCents(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wmedian_cents", exprs =>
-        WeightedMedianCents(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
-  }
 }

@@ -484,7 +484,6 @@ object Aggs {
     * last ulp to summation order. Same join/grouping shape as
     * q_udaf_wavg. */
   def udafWavgNative(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val li = Tables.lineitem(s, d)
       .withColumn("cents", expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
       .withColumn("qty", expr("CAST(l_quantity AS BIGINT)"))
@@ -505,7 +504,6 @@ object Aggs {
     * tradeoff. Oracle is the same window crossing-point SQL, so the gate
     * proves histogram-merge ≡ rank-then-filter exactly. */
   def aggWmedianNative(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     Tables.orders(s, d)
       .withColumn("cents",
         expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))

@@ -502,7 +502,6 @@ object Analytics {
     // interpreted higher-order evaluator and allocated a slice + result
     // array per outer index. Same packing, same element order, same
     // multiset — PackedPairsSpec pins equality against the SQL form.
-    graft.functions.VectorExprs.register(s)
     orderParts(s, d).select(explode(expr("packed_pairs(ps)")).as("pk"))
   }
 

@@ -177,7 +177,6 @@ object Dedup {
     * bounded: the audit guard caps the input at ≈[[AuditCap]] rows. */
   private[operators] def lshAuditFrame(docs: DataFrame, blockCols: Seq[String],
       nGram: Int, numPerms: Int): DataFrame = {
-    graft.functions.VectorExprs.register(docs.sparkSession)
     withToks(Tables.spread(docs))
       .withColumn("tset", expr(shingles(nGram)))
       .withColumn("mh", expr(s"minhash_sigs(tset, $numPerms)"))
@@ -378,7 +377,6 @@ object Dedup {
     * doc into every band bucket. */
   def minhashSignatures(docs: DataFrame, nGram: Int = 2,
       numPerms: Int = NumPerms, keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.VectorExprs.register(docs.sparkSession)
     val withSh = withToks(Tables.spread(docs))
       .withColumn("sh", expr(shingles(nGram)))
       .filter(size(col("sh")) > 0)
@@ -442,7 +440,7 @@ object Dedup {
     * on this corpus it cuts 276k candidates to ~2k. */
   def minhashCandidates(docs: DataFrame, nGram: Int = 2,
       numPerms: Int = NumPerms, bandRows: Int = BandRows,
-      estMin: Double = 0.0, sigLeafKey: Option[String] = None): DataFrame = {
+      estMin: Double = 0.0): DataFrame = {
     // Pair generation is a STREAMED self-join on the bucket key, not a
     // collect-ids-then-expand aggregation: a mass-duplicate hot bucket
     // (boilerplate duplicated 10^6× — the core dedup scenario) makes a
@@ -455,22 +453,12 @@ object Dedup {
     // additional properties the aggregation variants lack: no single
     // giant row can defeat executor memory, and the join parallelizes a
     // hot bucket's pair emission across its matching row groups.
-    // Round 16 (VERDICT r15 item 4): fixture-backed callers persist the
-    // per-doc SIGNATURE table so the two self-join legs (which the final
-    // plans showed each recomputing the full shingle+minhash map — the
-    // join goes broadcast at fixture scale, so AQE stage reuse never
-    // fires) share one signature pass; the banded explode re-runs per
-    // leg as a narrow map over the cache. memoPut discipline: rebuilt
-    // every construction (honest bench), displaced entry unpersisted.
-    val sigs0 = minhashSignatures(docs, nGram, numPerms)
-    val sigs = sigLeafKey match {
-      case Some(k) =>
-        val p = sigs0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.memoPut(sweepSigMemo, k, p)
-        p
-      case None => sigs0
-    }
+    // The signature table is not persisted as a leaf: round-16 same-JVM
+    // A/Bs measured it a loss at 5k docs (2.65 vs 4.14 s warm-min) and a
+    // wash-to-loss at the 100× replica on top of the verify-set leaf,
+    // because the candidate join's signature legs overlap the verify
+    // legs' work and leave no second corpus pass to save.
+    val sigs = minhashSignatures(docs, nGram, numPerms)
     val bkt = bucketsFromSigs(sigs, numPerms, bandRows)
     // Alias self-join (not two renamed projections): keeping both legs
     // structurally identical lets the ordering predicate ride INSIDE the
@@ -537,8 +525,7 @@ object Dedup {
 
   def nearDupPairs(docs: DataFrame, nGram: Int = 2, threshold: Double = 0.7,
       numPerms: Int = 32, bandRows: Int = 2,
-      setsLeafKey: Option[String] = None,
-      sigLeafKey: Option[String] = None): DataFrame = {
+      setsLeafKey: Option[String] = None): DataFrame = {
     // The verify stage references the (doc_id, tset) stream TWICE (a/b
     // legs below are different projections, so exchange reuse never
     // fires) — without a leaf the tokenize+shingle+distinct derivation
@@ -573,7 +560,7 @@ object Dedup {
     // threshold/2 keeps the miss probability negligible at every setting
     // (the estimate must fall below half the true similarity).
     minhashCandidates(docs, nGram, numPerms, bandRows,
-        estMin = math.min(0.25, threshold / 2), sigLeafKey = sigLeafKey)
+        estMin = math.min(0.25, threshold / 2))
       .join(a, "a_id").join(b, "b_id")
       .withColumn("inter", size(array_intersect(col("ta"), col("tb"))).cast("long"))
       .withColumn("uni",
@@ -595,19 +582,6 @@ object Dedup {
     * share >70% of the vocabulary — the "similar" pair space itself is
     * quadratic). Bigrams are discriminative, so true near-dup pairs stay
     * near-linear in corpus size. */
-  /** The signature-leaf variant (nearDupPairs' sigLeafKey) is a MEASURED
-    * REJECTION for this family at both scales (round 16, LeafShapeProbe
-    * same-JVM interleaved A/Bs): at 5k docs the persist LOSES outright
-    * (warm-min 2.65 stateless vs 4.14 s leafed — cache write + columnar
-    * read barrier vs one cheap minhash pass), and at the 100× replica,
-    * ON TOP of the r15 verify-set leaf, it is a wash-to-loss (5-rep
-    * 3-way: stateless 40.2 / sets-leaf 27.5 / sets+sigs 28.2 s at min,
-    * medians 29.6 vs 32.4) — the candidate join's signature legs
-    * overlap the verify legs' work, so there is no second corpus pass
-    * left to save. The mechanism stays (sigLeafKey, exercised by the
-    * probe; q_dedup_incr uses the same persist shape internally where
-    * it DOES pay — its corpus side is referenced by both the bucket
-    * join and nothing else recomputes it). */
   def dedupNeardup(s: SparkSession, d: String): DataFrame =
     nearDupPairs(Tables.documents(s, d),
         setsLeafKey = setsKeyIfBig(s, d, 2))
@@ -1387,7 +1361,6 @@ object Dedup {
     * SQL re-enters the interpreted lambda evaluator per element per perm
     * (measured ~3× slower on the calibration query). */
   private def withMd5Sigs(df: DataFrame, shCol: String): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     val withMh = df.withColumn("mh", expr(s"md5_minhash_sigs($shCol, $MdPerms)"))
     withMh.select((df.columns.map(col).toSeq ++
       (0 until MdPerms).map(i => col("mh").getItem(i).as(s"s$i"))): _*)
@@ -1566,7 +1539,6 @@ object Dedup {
     * Docs with <2 tokens have no shingles and are dropped, as in
     * [[minhashSignatures]]. */
   def hammingSigs(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExprs.register(docs.sparkSession)
     withToks(Tables.spread(docs))
       .filter(size(col("toks")) >= 2)
       .withColumn("sh2", expr(
@@ -1672,7 +1644,6 @@ object Dedup {
     * construction. At scale this bucket is the partition key that turns
     * ANN into a per-bucket local search. */
   def annBuckets(emb: DataFrame, n: Long): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val width = annWidth(n)
     val bits = (0 until width).map { p =>
       val w = (0 until Dim).map(j => s"${planeWeight(p, j)}D").mkString(", ")

@@ -105,7 +105,6 @@ object Geo {
     * the distance stays inside whole-stage codegen (plan-asserted). The
     * oracle is identical to q_geo_haversine's formula SQL. */
   def geoDistNative(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     withCoords(Tables.customer(s, d))
       .withColumn("dist_km",
         round(expr("haversine_km(lat, lon, 43.6532d, -79.3832d)"), 3))
@@ -132,7 +131,6 @@ object Geo {
   def geoNearest(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    graft.functions.VectorExprs.register(s)
     val a = broadcast(anchors.toDF("anchor_id", "a_lat", "a_lon"))
     val w = Window.partitionBy(col("c_custkey"))
       .orderBy(col("km").asc, col("anchor_id").asc)
@@ -167,7 +165,6 @@ object Geo {
     * rounded distance to a .0005 boundary is 4e-7 km — both dwarf any
     * engine libm ulp drift. */
   def joinSpatial(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val pts = Tables.customer(s, d).select(
         col("c_custkey").as("id"),
         (((col("c_custkey") * 37) % 12000).cast("double") / 100.0 - 60.0 + 0.005)

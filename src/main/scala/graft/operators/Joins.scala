@@ -217,16 +217,14 @@ object Joins {
   /** The SAME range-join semantics as [[joinRange]], but written the way
     * a user naturally would — `abs(a − b) <= w` as the join's ONLY
     * condition — and planned scalably by the `RangeJoinRewrite`
-    * optimizer rule (installed session-locally, idempotent). This
+    * optimizer rule, which `SparkEntry.queries` installs through
+    * [[graft.GraftExtensions.install]]. This
     * declares the OPTIMIZER-EXTENSION path itself in the correctness
     * gate: the naive predicate would otherwise be a nested-loop plan,
     * and the oracle proves the rewrite is semantics-preserving row for
     * row. PlanQualitySpec pins that the executed plan carries the
     * rewrite (bucket Generate + equi join, no BroadcastNestedLoop). */
   def joinRangeAuto(s: SparkSession, d: String): DataFrame = {
-    if (!s.experimental.extraOptimizations.exists(_ eq graft.plans.RangeJoinRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.RangeJoinRewrite
     val ev = Tables.events(s, d).withColumn("us", expr("unix_micros(ts)"))
     val probes = ev.filter(col("event_type") === "error")
       .select(col("event_id"), col("us"))

@@ -23,7 +23,6 @@ import graft.Tables
 object Sim {
 
   private def vectors(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     Tables.embeddings(s, d)
       .withColumn("nrm", expr("sqrt(vec_dot(embedding, embedding))"))
   }
@@ -631,7 +630,6 @@ object Sim {
   private[graft] def annAssignTo(cents: DataFrame, vecs: DataFrame,
       k: Int): DataFrame = {
     val s = vecs.sparkSession
-    graft.functions.VectorExprs.register(s)
     val q = vecs.select(col("vec_id"), col("embedding"))
       .withColumn("nrm", expr("sqrt(vec_dot(embedding, embedding))"))
       .withColumn("qv", expr(
@@ -659,8 +657,7 @@ object Sim {
     * recentered per delta (the standard IVF ingest contract: lists
     * drift, periodic rebuild re-trains — a retrain writes a new state
     * version via the params/fingerprint key). */
-  def appendAnnState(s: SparkSession, d: String, deltaVecs: DataFrame,
-      autoCompact: Boolean = true): Unit = {
+  def appendAnnState(s: SparkSession, d: String, deltaVecs: DataFrame): Unit = {
     val path = annEnsure(s, d)
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -698,7 +695,7 @@ object Sim {
     // on a fixed ingest cadence (see [[AnnCompactRatio]]). Callers on a
     // latency budget (the streaming ingest path) still see a periodic
     // spike when the gate opens — bounded to ~1/ratio of bytes ingested.
-    if (autoCompact && annCompactDue(fs, root))
+    if (annCompactDue(fs, root))
       compactAnnState(s, d)
   }
 

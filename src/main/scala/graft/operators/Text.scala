@@ -235,7 +235,6 @@ object Text {
         // 1.2–1.5 s unchanged — the memo is now insurance for the
         // two-consumer pair, no longer the main lever (pair cold+warm
         // ≈ 5.3 s vs the round-11 33 s).
-        graft.functions.VectorExprs.register(s)
         val docs = Tables.documents(s, d)
         Tables.spread(docs)
           .select(col("doc_id"),
@@ -830,7 +829,6 @@ object Text {
     * twin shares q_text_entropy's oracle verbatim; LgNativeSpec pins
     * bit-parity row-for-row between the two plans. */
   def textEntropyNative(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val counts = postingCounts(s, d)
       .select(col("doc_id"), col("tok"), col("tf").as("c"))
     val totals = counts.groupBy(col("doc_id")).agg(sum(col("c")).as("n"))
@@ -1265,7 +1263,6 @@ object Text {
     * trigram machinery is the consumer shape; this is the profile-builder
     * shape that would TRAIN those profiles at corpus scale. */
   def textChargrams(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     Tables.spread(Tables.documents(s, d))
       .select(expr("char_ngrams(text, 4)").as("gram"))
       .groupBy(col("gram"))

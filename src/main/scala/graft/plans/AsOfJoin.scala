@@ -41,9 +41,10 @@ case class AsOfJoin(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner rule: AsOfJoin → AsOfJoinExec. Installed per session via
-  * `spark.experimental.extraStrategies` (public hook) and via
-  * GraftExtensions for the conf-based deployment path. */
+/** Planner rule: AsOfJoin → AsOfJoinExec. Part of the
+  * [[graft.GraftExtensions]] table: injected by its `apply` on the
+  * conf-based deployment path, or added to an existing session by
+  * `GraftExtensions.install`. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: AsOfJoin =>
@@ -54,16 +55,15 @@ object AsOfJoinStrategy extends SparkStrategy {
 }
 
 /** Library surface for the operator: resolves the named key/time columns
-  * against each side, installs the strategy (idempotent), and returns
+  * against each side, installs the engine's extensions (idempotent, via
+  * [[graft.GraftExtensions.install]]), and returns
   * the joined DataFrame (left columns + nullable right columns). */
 object AsOfJoinApi {
   def join(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame,
       lKey: String, rKey: String, lTime: String, rTime: String)
       : org.apache.spark.sql.DataFrame = {
     val s = l.sparkSession
-    if (!s.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ AsOfJoinStrategy
+    graft.GraftExtensions.install(s)
     val lp = l.queryExecution.analyzed
     val rp = r.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n)

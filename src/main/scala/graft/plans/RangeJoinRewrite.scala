@@ -20,8 +20,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *
   * This rule lets a user write the NATURAL predicate — SQL like
   * `FROM a JOIN b ON abs(a.ts_us - b.ts_us) <= 60000000` — and still get
-  * the scalable plan, via `spark.sql.extensions=graft.GraftExtensions`
-  * (or session-local `spark.experimental.extraOptimizations`). Scope is
+  * the scalable plan. The rule is part of the [[graft.GraftExtensions]]
+  * table: `spark.sql.extensions=graft.GraftExtensions` injects it, and
+  * `GraftExtensions.install` adds it to an existing session. Scope is
   * deliberately narrow and safe:
   *  - fires only when the WHOLE join condition is the abs-range predicate
   *    (an additional equi key already gives Spark a hash/SMJ plan);

@@ -47,6 +47,7 @@ object StreamAnnIngest {
   def run(spark: SparkSession, d: String, stageDir: String,
       ckptDir: String, sinkDir: String,
       candFilter: Column = lit(true)): Long = {
+    graft.GraftExtensions.install(spark)
     val processed = new java.util.concurrent.atomic.AtomicLong(0L)
     val schema = graft.Tables.embeddings(spark, d).schema
     val q = deltaStream(spark, stageDir, schema).writeStream

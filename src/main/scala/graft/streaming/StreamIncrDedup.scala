@@ -52,6 +52,7 @@ object StreamIncrDedup {
     * this invocation processed. */
   def run(spark: SparkSession, d: String, stageDir: String,
       ckptDir: String, sinkDir: String): Long = {
+    graft.GraftExtensions.install(spark)
     val processed = new java.util.concurrent.atomic.AtomicLong(0L)
     val schema = graft.Tables.documents(spark, d).schema
     val q = deltaStream(spark, stageDir, schema).writeStream

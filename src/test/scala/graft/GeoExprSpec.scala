@@ -29,7 +29,6 @@ class GeoExprSpec extends SparkSpec {
   }
 
   test("null and edge inputs: identity distance 0, antipodal ~ half circumference") {
-    graft.functions.VectorExprs.register(spark)
     val r = spark.sql(
       """SELECT haversine_km(43.65d, -79.38d, 43.65d, -79.38d) AS zero,
         |       haversine_km(0d, 0d, 0d, 180d) AS anti,

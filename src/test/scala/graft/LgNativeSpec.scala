@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class LgNativeSpec extends SparkSpec {
 
   test("lg_micro: bit-parity with IntLg across magnitudes and seams") {
-    functions.VectorExprs.register(spark)
     val ns = ((1L to 300L) ++
       (1 to 40).flatMap(k => Seq((1L << k) - 1, 1L << k, (1L << k) + 1)) ++
       Seq(999999L, 123456789L, 987654321987L)).distinct.sorted
@@ -23,7 +22,6 @@ class LgNativeSpec extends SparkSpec {
   }
 
   test("lg_micro: total on non-positive input (contract: 0)") {
-    functions.VectorExprs.register(spark)
     import spark.implicits._
     val r = Seq(0L, -5L).toDF("n").selectExpr("lg_micro(n) AS lm")
       .collect().map(_.getLong(0)).toSeq

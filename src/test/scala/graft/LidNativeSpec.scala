@@ -15,7 +15,6 @@ import graft.operators.Text
 class LidNativeSpec extends SparkSpec {
 
   private def native(docs: DataFrame): Seq[(Long, String, Long)] = {
-    graft.functions.VectorExprs.register(spark)
     docs.select(col("doc_id"),
         explode(expr("lang_trigram_scores(text)")).as("ls"))
       .select(col("doc_id"), col("ls.lang"), col("ls.score"))

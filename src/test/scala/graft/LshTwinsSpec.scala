@@ -75,7 +75,6 @@ class LshTwinsSpec extends SparkSpec {
     // and signature agreement tracks true Jaccard on a constructed pair:
     // two 20-token sets sharing 18 tokens (J = 18/22 ≈ 0.82) must agree
     // on far more than the ~1/32 the degenerate ladder produced.
-    functions.VectorExprs.register(spark)
     import spark.implicits._
     val ta = (1 to 20).map(i => s"tok$i")
     val tb = (3 to 22).map(i => s"tok$i")

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class MinhashParitySpec extends SparkSpec {
 
   test("minhash_sigs rejects non-INT perm counts with a real message") {
-    functions.VectorExprs.register(spark)
     import spark.implicits._
     val df = Seq(Seq("a b", "b c")).toDF("sh")
     val eLong = intercept[Exception] {
@@ -24,7 +23,6 @@ class MinhashParitySpec extends SparkSpec {
   }
 
   test("minhash_sigs equals the xxhash64/pmod SQL formulation") {
-    functions.VectorExprs.register(spark)
     val p = 2147483647L
     val nPerms = 8
     val docs = Tables.documents(spark, sf0001)

@@ -14,7 +14,6 @@ class PackedPairsSpec extends SparkSpec {
       "transform(slice(ps, i + 2, size(ps)), y -> x * 2147483648L + y)))"
 
   test("packed_pairs equals the nested-transform SQL on the fixture baskets") {
-    graft.functions.VectorExprs.register(spark)
     val ps = Tables.lineitem(spark, sf0001)
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
@@ -29,7 +28,6 @@ class PackedPairsSpec extends SparkSpec {
   }
 
   test("packed_pairs handles empty and singleton arrays") {
-    graft.functions.VectorExprs.register(spark)
     import spark.implicits._
     val rows = Seq(Seq.empty[Long], Seq(7L), Seq(1L, 2L), Seq(3L, 5L, 9L))
       .toDF("ps")

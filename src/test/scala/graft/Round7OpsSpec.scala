@@ -276,7 +276,6 @@ class Round7OpsSpec extends SparkSpec {
   }
 
   test("char_ngrams generator equals the explode(transform(...)) formulation") {
-    functions.VectorExprs.register(spark)
     val docs = Tables.documents(spark, sf0001)
     val gen = docs.select(expr("char_ngrams(text, 4)").as("gram"))
       .groupBy("gram").count().collect()

@@ -15,6 +15,8 @@ Usage:
         [--calib PREV_S:CURR_S[:PREV_ALL:CURR_ALL]] \
         <prev_full.json> <curr_full.json> [report_out]
 
+--calib may be given before, between or after the positional arguments.
+
 --calib normalizes the CURRENT run by host-speed ratios measured by
 graft.Calibrate (the calibration_s / calibration_all_s fields of the two
 runs' JSON trailers). A slower host inflates CURR_S, so dividing it out
@@ -55,20 +57,32 @@ ABS_FLOOR_S = 0.3
 
 
 def main():
-    args = sys.argv[1:]
+    argv = sys.argv[1:]
     calib_s = 1.0   # serial-axis ratio prev/curr
     calib_a = None  # all-core-axis ratio prev/curr (None = single-axis)
-    if args and args[0] == "--calib":
-        parts = [float(x) for x in args[1].split(":")]
+    # --calib may come in any position; everything else is positional.
+    args = []
+    while argv:
+        a = argv.pop(0)
+        if a != "--calib":
+            args.append(a)
+            continue
+        if not argv:
+            print("--calib wants a value")
+            return 2
+        parts = [float(x) for x in argv.pop(0).split(":")]
         if len(parts) not in (2, 4):
             print("--calib wants PREV_S:CURR_S or PREV_S:CURR_S:PREV_ALL:CURR_ALL")
             return 2
         calib_s = parts[0] / parts[1]
         if len(parts) == 4:
             calib_a = parts[2] / parts[3]
-        args = args[2:]
-    if len(args) < 2:
+    if len(args) < 2 or len(args) > 3:
         print(__doc__)
+        return 2
+    if len(args) == 3 and args[2].startswith("-"):
+        print(f"report_out must be a file path, got {args[2]!r} "
+              "(an unknown flag?)")
         return 2
     def load(path):
         obj = json.load(open(path))
