@@ -524,8 +524,8 @@ object Analytics {
   private[graft] def pairSupport(s: SparkSession, d: String): DataFrame =
     orderPairs(s, d).groupBy(col("pk")).agg(count(lit(1)).as("sup"))
 
-  /** Session-scoped memo for the SUPPORT-≥2 co-purchase pair leaf —
-    * the `(pk, sup)` survivor set that FOUR declared queries derive
+  /** The shared SUPPORT-≥2 co-purchase pair leaf — the `(pk, sup)`
+    * survivor set that FOUR declared queries derive
     * identically and, until round 15, each re-derived from scratch
     * (the derivation — pair explode + support groupBy — is each one's
     * dominant stage at 100×, ~26 s, PERF.md finding 33): q_graph_cc,
@@ -534,40 +534,30 @@ object Analytics {
     * checkpointed — it is dim²-bounded (support ≥ 2 collapses the pair
     * stream to the co-purchase survivor set), so the cache write is
     * noise where a full-support checkpoint was a measured 45 s/100×
-    * tax (see [[pairSupport]]). Same discipline as Dedup.labelMemo:
-    * keyed on `<scId>:<dir>@<lineitem fingerprint>`, stale siblings
-    * evicted on insert, dropped wholesale by measurement harnesses via
+    * tax (see [[pairSupport]]). Same discipline as Dedup's label leaf:
+    * a [[Hints.leaf]] keyed on the lineitem fingerprint, a stale entry
+    * evicted on rebuild, dropped wholesale by measurement harnesses via
     * Hints.evictAllMemos. Accounting mirrors the dedup convention:
     * q_graph_cc — the family's heaviest consumer — always REBUILDS and
-    * refreshes the memo (its bench time keeps measuring the full
+    * republishes the leaf (its bench time keeps measuring the full
     * derivation honestly); kcore and lift consume the shared leaf.
     * Measured solo at 100× (TimeOne, BASELINE.md round 15): warm
     * consumers drop to their own round cost — kcore 37.7 → ~5.6 s,
     * cc rounds ~10 s — while cold cost is unchanged from r14 (the
     * eager survivor-set checkpoint existed there per query). */
-  private val supportedPairsMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  private def supportedPairsKey(s: SparkSession, d: String): String =
-    System.identityHashCode(s.sparkContext) + ":" + d + "@" +
-      Tables.pathFingerprint(s, s"$d/lineitem.parquet")
-
   private def buildSupportedPairs(s: SparkSession, d: String): DataFrame =
     Hints.checkpoint(pairSupport(s, d).filter(col("sup") >= 2),
       eager = true)
 
   private[graft] def supportedPairs(s: SparkSession, d: String): DataFrame =
-    Hints.memoInsert(supportedPairsMemo, supportedPairsKey(s, d),
-      buildSupportedPairs(s, d))
+    Hints.leaf(s, d, "lineitem", "supported-pairs")(buildSupportedPairs(s, d))
 
-  /** q_graph_cc's rebuild-always entry: refresh the memo so later
-    * consumers in the same session reuse the fresh leaf (memoPut
+  /** q_graph_cc's rebuild-always entry: republish the leaf so later
+    * consumers in the same session reuse the fresh one (rebuildLeaf
     * unpersists the displaced entry — no block leak). */
-  private[graft] def rebuildSupportedPairs(s: SparkSession, d: String): DataFrame = {
-    val leaf = buildSupportedPairs(s, d)
-    Hints.memoPut(supportedPairsMemo, supportedPairsKey(s, d), leaf)
-    leaf
-  }
+  private[graft] def rebuildSupportedPairs(s: SparkSession, d: String): DataFrame =
+    Hints.rebuildLeaf(s, d, "lineitem", "supported-pairs")(
+      buildSupportedPairs(s, d))
 
   /** Market-basket co-occurrence — the association-rule support count:
     * part pairs appearing in the same order, top-20 by support. Pairs per

@@ -171,9 +171,9 @@ object Dedup {
     * is no exchange for AQE stage-reuse to share), and the join keys'
     * inferred IsNotNull pushed a second full signature evaluation into
     * the scan filter. The declared twins persist this frame once per
-    * construction (memoPut — rebuilt every construction, superseded
-    * entry unpersisted) and feed BOTH candidate legs and both verify
-    * legs from it; property tests keep the stateless plan. Bulk is
+    * construction ([[persistedLeaf]] — rebuilt every construction,
+    * superseded entry unpersisted) and feed BOTH candidate legs and both
+    * verify legs from it; property tests keep the stateless plan. Bulk is
     * bounded: the audit guard caps the input at ≈[[AuditCap]] rows. */
   private[operators] def lshAuditFrame(docs: DataFrame, blockCols: Seq[String],
       nGram: Int, numPerms: Int): DataFrame = {
@@ -246,25 +246,16 @@ object Dedup {
   def dedupJaccardLsh(s: SparkSession, d: String): DataFrame =
     dedupJaccardLshOn(auditSample(Tables.documents(s, d),
       Tables.rowCount(s, d, "documents"), "doc_id"),
-      Some(System.identityHashCode(s.sparkContext) + ":" + d +
-        ":jlsh-frame@" + Tables.pathFingerprint(s, s"$d/documents.parquet")))
+      persistedLeaf(s, d, "jlsh-frame"))
 
   /** The 1-gram verify set IS the banded shingle set (shingles(1) =
     * array_distinct(toks)), so both verify legs read the same persisted
     * frame the candidate legs band over — one signature+shingle pass per
     * construction instead of four (two candidate legs, two verify legs). */
   def dedupJaccardLshOn(docs: DataFrame,
-      frameLeafKey: Option[String] = None): DataFrame = {
-    val frame0 = lshAuditFrame(docs, Seq("lang", "source"),
-      nGram = 1, numPerms = 32)
-    val frame = frameLeafKey match {
-      case Some(k) =>
-        val p = frame0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.memoPut(sweepSigMemo, k, p)
-        p
-      case None => frame0
-    }
+      frameLeaf: DataFrame => DataFrame = identity): DataFrame = {
+    val frame = frameLeaf(lshAuditFrame(docs, Seq("lang", "source"),
+      nGram = 1, numPerms = 32))
     val cand = blockedLshCandidatesFromFrame(frame, Seq("lang", "source"),
       numPerms = 32, bandRows = 2, estMin = 0.5)
     val a = frame.select(col("doc_id").as("a_id"), col("tset").as("ta"))
@@ -295,21 +286,12 @@ object Dedup {
   def dedupContainLsh(s: SparkSession, d: String): DataFrame =
     dedupContainLshOn(auditSample(Tables.documents(s, d),
       Tables.rowCount(s, d, "documents"), "doc_id"),
-      Some(System.identityHashCode(s.sparkContext) + ":" + d +
-        ":clsh-frame@" + Tables.pathFingerprint(s, s"$d/documents.parquet")))
+      persistedLeaf(s, d, "clsh-frame"))
 
   def dedupContainLshOn(docs: DataFrame,
-      frameLeafKey: Option[String] = None): DataFrame = {
-    val frame0 = lshAuditFrame(docs, Seq("lang", "source"),
-      nGram = 1, numPerms = 64)
-    val frame = frameLeafKey match {
-      case Some(k) =>
-        val p = frame0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.memoPut(sweepSigMemo, k, p)
-        p
-      case None => frame0
-    }
+      frameLeaf: DataFrame => DataFrame = identity): DataFrame = {
+    val frame = frameLeaf(lshAuditFrame(docs, Seq("lang", "source"),
+      nGram = 1, numPerms = 64))
     val und = blockedLshCandidatesFromFrame(frame, Seq("lang", "source"),
       numPerms = 64, bandRows = 1, estMin = 0.0)
     // Both orientations from ONE traversal of the undirected pair set —
@@ -494,18 +476,6 @@ object Dedup {
     * On a natural (Zipfian, large-vocab) corpus wider bands (4 rows)
     * would cut false candidates; this synthetic corpus has high
     * background similarity, so recall gets the budget instead. */
-  /** Shared-leaf memo for the verify-stage shingle sets (see
-    * [[nearDupPairs]]'s setsLeafKey). */
-  private val setsMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  /** Memo key for the (doc_id, tset) verify leaf — evictStale format:
-    * variant tag (incl. gram width) before the '@', fingerprint after. */
-  private def setsKey(s: SparkSession, d: String, nGram: Int): String =
-    System.identityHashCode(s.sparkContext) + ":" + d +
-      s":ndp-sets#g$nGram@" +
-      Tables.pathFingerprint(s, s"$d/documents.parquet")
-
   /** Corpus size below which the verify leaf is NOT worth its cache
     * write — footer-count-conditional, the adaptive-width discipline
     * (annWidth/kgExtraWidth). Three measured anchors, same session:
@@ -517,40 +487,45 @@ object Dedup {
     * above the measured wash. */
   private[graft] val SetsLeafMinDocs = 100000L
 
-  private def setsKeyIfBig(s: SparkSession, d: String,
-      nGram: Int): Option[String] =
+  /** The (doc_id, tset) verify leaf of [[nearDupPairs]] (tag carries
+    * the gram width) at corpus sizes where it pays, else `identity`. */
+  private def setsLeafIfBig(s: SparkSession, d: String,
+      nGram: Int): DataFrame => DataFrame =
     if (Tables.rowCount(s, d, "documents") >= SetsLeafMinDocs)
-      Some(setsKey(s, d, nGram))
-    else None
+      persistedLeaf(s, d, s"ndp-sets#g$nGram")
+    else identity
+
+  /** A per-construction documents leaf published under `tag`: lazily
+    * persisted (MEMORY_AND_DISK_SER, so construction stays job-free) and
+    * rebuilt by every construction so each rep keeps paying its
+    * derivation (the honest-accounting discipline of [[dedupClusters]]);
+    * [[Hints.rebuildLeaf]] unpersists the leaf it displaces, and
+    * Hints.evictAllMemos drops it. */
+  private def persistedLeaf(s: SparkSession, d: String,
+      tag: String): DataFrame => DataFrame =
+    df => Hints.rebuildLeaf(s, d, "documents", tag)(
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
   def nearDupPairs(docs: DataFrame, nGram: Int = 2, threshold: Double = 0.7,
       numPerms: Int = 32, bandRows: Int = 2,
-      setsLeafKey: Option[String] = None): DataFrame = {
+      setsLeaf: DataFrame => DataFrame = identity): DataFrame = {
     // The verify stage references the (doc_id, tset) stream TWICE (a/b
     // legs below are different projections, so exchange reuse never
     // fires) — without a leaf the tokenize+shingle+distinct derivation
     // runs once per leg, corpus-linear each time. Fixture-backed callers
-    // pass setsLeafKey (memoPut: rebuilt per construction — honest
+    // pass setsLeaf ([[persistedLeaf]]: rebuilt per construction — honest
     // bench — displaced entry unpersisted, swept by evictAllMemos);
     // ad-hoc callers (property tests on synthetic frames) omit it and
     // keep the stateless plan. Measured solo at 100×, same session
-    // (memoPut semantics — every rep pays ONE derivation + the cache
+    // (rebuild-always — every rep pays ONE derivation + the cache
     // write): q_dedup_neardup 35.5 → 24.7 s, q_dedup_clusters 39.2 →
     // 26.3 s, q_graph_cc unchanged (35.2 → 34.2 s — its edges are
     // co-purchase pairs, no shingle verify). An unmanaged inline
     // persist measured 11.4 s but that is the WARM-rep artifact of
     // CacheManager plan-matching across constructions, plus an
     // unevictable cache entry — rejected for the leaf discipline.
-    val sets0 = withToks(Tables.spread(docs))
-      .withColumn("tset", expr(shingles(nGram)))
-    val withSets = setsLeafKey match {
-      case Some(k) =>
-        val p = sets0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.memoPut(setsMemo, k, p)
-        p
-      case None => sets0
-    }
+    val withSets = setsLeaf(withToks(Tables.spread(docs))
+      .withColumn("tset", expr(shingles(nGram))))
     val a = withSets.select(col("doc_id").as("a_id"), col("tset").as("ta"))
     val b = withSets.select(col("doc_id").as("b_id"), col("tset").as("tb"))
     // The prefilter must track the verify threshold, not assume the 0.7
@@ -583,8 +558,7 @@ object Dedup {
     * quadratic). Bigrams are discriminative, so true near-dup pairs stay
     * near-linear in corpus size. */
   def dedupNeardup(s: SparkSession, d: String): DataFrame =
-    nearDupPairs(Tables.documents(s, d),
-        setsLeafKey = setsKeyIfBig(s, d, 2))
+    nearDupPairs(Tables.documents(s, d), setsLeaf = setsLeafIfBig(s, d, 2))
       .orderBy(col("a_id").asc, col("b_id").asc)
 
   /** Incremental (delta-ingest) near-dup — the query a production corpus
@@ -606,7 +580,7 @@ object Dedup {
     // ways (doc_id%10 = vs ≠ 7) — distinct subtrees, so exchange reuse
     // never fires and the corpus-linear signature map ran once PER
     // SIDE. Same single-consumer-leaf treatment as [[dedupLshSweep]]
-    // (memoPut: rebuilt each construction, displaced entry
+    // ([[persistedLeaf]]: rebuilt each construction, displaced entry
     // unpersisted). Measured at 100× (same-session solo A/B):
     // 41.3 → 33.0 s (14.8× → 11.0×); sf0.1 TimeOne min 2.25 → 2.51 s
     // (+0.26 s cache write at the scale where one signature pass is
@@ -617,16 +591,7 @@ object Dedup {
     // (16 copies per doc), so the old bkt persist cached 16× the bytes
     // for the same saved signature computation; the banded explode
     // re-runs over the cache as a narrow map per consumer side.
-    // Variant tag BEFORE the '@': Hints.evictStale treats everything
-    // after the last '@' as the fingerprint, so a tag appended AFTER it
-    // would make the two sweepSigMemo variants cross-evict each other's
-    // still-current leaf (same prefix, "different fingerprint").
-    val sigs = minhashSignatures(docs, 2, 32)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.memoPut(sweepSigMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + ":incr-sigs@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
-      sigs)
+    val sigs = persistedLeaf(s, d, "incr-sigs")(minhashSignatures(docs, 2, 32))
     val bkt = bucketsFromSigs(sigs, 32, 2)
     val n = bkt.filter(col("doc_id") % 10 === 7)
       .select(col("doc_id").as("new_id"), col("sig").as("nsig"),
@@ -774,7 +739,7 @@ object Dedup {
     * from the current key is a dead artifact (older fingerprint, older
     * parameters or format) that nothing will ever read again — delete
     * it, plus any orphaned `.stage-*` dirs a crashed writer left. This
-    * mirrors the memo evictStale discipline: without it every fixture
+    * mirrors Hints.leaf's stale-fingerprint eviction: without it every fixture
     * regeneration and every parameter change would leak a full corpus
     * signature table into java.io.tmpdir forever. */
   private[graft] def evictStaleSigState(s: SparkSession, d: String,
@@ -1165,39 +1130,27 @@ object Dedup {
         s"clusterLabels: star contraction did not converge in maxRounds=$maxRounds " +
           "rounds; raise maxRounds for this edge set")
     // Materialize the converged labels ONCE (node-sized, safe at any
-    // scale): this is the shared leaf the label memo serves to
+    // scale): this is the shared label leaf served to
     // q_dedup_repr / q_dedup_split and the caller's final action.
     Hints.checkpoint(labelsFrom(edges), eager = true)
   }
 
-  /** Session-scoped memo of the checkpointed cluster-label leaf, shared
-    * between the AUDIT query (q_dedup_clusters) and the APPLY query
-    * (q_dedup_repr): in production the labels are one materialized
-    * artifact that every downstream consumer joins against, not a
-    * pipeline each consumer re-runs. The key carries the documents
-    * file's (mtime, length) fingerprint, so a fixture regeneration
-    * invalidates the entry instead of serving stale labels; the memo
-    * holds cached-leaf DataFrames, whose blocks the ContextCleaner
-    * reclaims once unreferenced.
+  /** The checkpointed cluster-label leaf (tag "labels"), shared between
+    * the AUDIT query (q_dedup_clusters) and the APPLY queries
+    * (q_dedup_repr, q_dedup_split): in production the labels are one
+    * materialized artifact that every downstream consumer joins
+    * against, not a pipeline each consumer re-runs. The leaf is keyed
+    * on the documents fingerprint, so a fixture regeneration
+    * invalidates it instead of serving stale labels.
     *
     * Accounting is asymmetric by design: [[dedupClusters]] always
-    * REBUILDS (and refreshes the memo) so its bench time keeps measuring
-    * the full LSH→verify→propagate pipeline honestly, while
-    * [[dedupRepr]] CONSUMES the shared leaf (building it only when it
-    * runs standalone) and pays just its own join + window — the apply
-    * step's real marginal cost. */
-  private val labelMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  /** Leak-guard registry for [[dedupLshSweep]]'s per-construction
-    * signature leaf (see memoPut there — rebuild always, unpersist the
-    * displaced entry). */
-  private val sweepSigMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  private def labelKey(s: SparkSession, d: String): String =
-    System.identityHashCode(s.sparkContext) + ":" + d + "@" +
-      Tables.pathFingerprint(s, s"$d/documents.parquet")
+    * REBUILDS (Hints.rebuildLeaf) so its bench time keeps measuring the
+    * full LSH→verify→propagate pipeline honestly, while [[dedupRepr]]
+    * CONSUMES the shared leaf (building it only when it runs standalone)
+    * and pays just its own join + window — the apply step's real
+    * marginal cost. */
+  private def labelLeaf(s: SparkSession, d: String): DataFrame =
+    Hints.leaf(s, d, "documents", "labels")(buildLabels(s, d))
 
   /** Round 15 (VERDICT r14 item 4): the labeling stage now runs
     * [[Graph.ccAdjacency]] — adjacency-leaf min-label propagation with
@@ -1215,7 +1168,7 @@ object Dedup {
   private def buildLabels(s: SparkSession, d: String): DataFrame =
     Graph.ccAdjacency(s,
         nearDupPairs(Tables.documents(s, d),
-          setsLeafKey = setsKeyIfBig(s, d, 2))
+          setsLeaf = setsLeafIfBig(s, d, 2))
         .select(col("a_id").as("a_pk"), col("b_id").as("b_pk")))
       .select(col("node").as("id"), col("lbl"))
 
@@ -1225,7 +1178,7 @@ object Dedup {
     * (the contamination that inflates benchmarks); hashing each
     * CLUSTER keeps every near-dup family on one side by construction.
     * Both schemes are computed here side by side from the SAME shared
-    * checkpointed label leaf ([[labelMemo]]), with singleton docs
+    * checkpointed label leaf ([[labelLeaf]]), with singleton docs
     * falling back to their own id (coalesce — labels only exist for
     * docs with at least one near-dup edge). The output pins the
     * argument numerically: n_leaky_naive counts clusters the doc-hash
@@ -1234,7 +1187,7 @@ object Dedup {
     * exact, stable under corpus growth — adding documents never moves
     * an existing cluster's assignment. */
   def dedupSplit(s: SparkSession, d: String): DataFrame = {
-    val cl = Hints.memoInsert(labelMemo, labelKey(s, d), buildLabels(s, d))
+    val cl = labelLeaf(s, d)
       .select(col("id").as("doc_id"), col("lbl").as("canon_id"))
     val g = Tables.documents(s, d).select(col("doc_id"))
       .join(cl, Seq("doc_id"), "left")
@@ -1268,9 +1221,7 @@ object Dedup {
   }
 
   def dedupClusters(s: SparkSession, d: String): DataFrame = {
-    val labels = buildLabels(s, d)
-    Hints.memoPut(labelMemo, labelKey(s, d), labels)
-    labels
+    Hints.rebuildLeaf(s, d, "documents", "labels")(buildLabels(s, d))
       .select(col("id").as("doc_id"), col("lbl").as("canon_id"))
       .orderBy(col("doc_id").asc)
   }
@@ -1282,11 +1233,11 @@ object Dedup {
     * in); everyone else points at the kept representative. The window
     * partitions by CLUSTER id, so partitions are cluster-sized regardless
     * of corpus size, and the cluster labels are the SHARED checkpointed
-    * leaf from [[labelMemo]] — the same convergence-guarded propagation
+    * leaf from [[labelLeaf]] — the same convergence-guarded propagation
     * q_dedup_clusters materializes, consumed here instead of re-run. */
   def dedupRepr(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
-    val cl = Hints.memoInsert(labelMemo, labelKey(s, d), buildLabels(s, d))
+    val cl = labelLeaf(s, d)
       .select(col("id").as("doc_id"), col("lbl").as("canon_id"))
     val wFull = org.apache.spark.sql.expressions.Window
       .partitionBy(col("canon_id"))
@@ -1397,19 +1348,14 @@ object Dedup {
     // the md5-minhash map (md5 per shingle — this query's dominant
     // per-row cost) executing once per leg, with the join-key IsNotNull
     // pushdown re-deriving signatures in the scan filter on top. One
-    // persisted audit-cap-bounded frame per construction (memoPut —
-    // rebuild-always, displaced entry unpersisted) serves both legs.
-    val base = withMd5Sigs(
+    // persisted audit-cap-bounded frame per construction ([[persistedLeaf]]
+    // — rebuild-always, displaced entry unpersisted) serves both legs.
+    val base = persistedLeaf(s, d, "esterr-base")(withMd5Sigs(
       withToks(Tables.spread(guarded))
         .withColumn("tset", expr(shingles(2)))
         .filter(size(col("tset")) > 0)
         .select(col("doc_id"), col("lang"), col("source"), col("tset")),
-      "tset")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.memoPut(sweepSigMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + ":esterr-base@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
-      base)
+      "tset"))
     val aCols = col("doc_id").as("a_id") +: col("lang").as("lang") +:
       col("source").as("source") +: col("tset").as("ta") +:
       (0 until MdPerms).map(i => col(s"s$i").as(s"a$i"))
@@ -1451,7 +1397,7 @@ object Dedup {
     // 8-perm signature per doc, THE dominant cost at scale) runs once
     // PER ARM. Lazy persist keeps construction job-free (the laziness
     // pin); the first arm's action populates the cache and the other two
-    // read it. memoPut, not memoInsert: this leaf has ONE consumer, so
+    // read it. rebuildLeaf, not leaf: this leaf has ONE consumer, so
     // every construction REBUILDS it — bench reps keep paying the
     // signature stage (the honest-accounting discipline of
     // [[dedupClusters]]) — while the superseded entry is unpersisted so
@@ -1459,13 +1405,8 @@ object Dedup {
     // (same-session solo A/B): 34.7 → 22.6 s (ratio 15.4× → 8.5×);
     // sf0.1 TimeOne min 1.91 → 1.93 s — wash, as the leaf rule predicts
     // for a re-referenced stream whose base-scale derivation is cheap.
-    val sigs = minhashMd5Sigs(Tables.documents(s, d))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // Tag before '@' — see the dedupIncr note (evictStale contract).
-    Hints.memoPut(sweepSigMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + ":sweep-sigs@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
-      sigs)
+    val sigs = persistedLeaf(s, d, "sweep-sigs")(
+      minhashMd5Sigs(Tables.documents(s, d)))
     def cfg(r: Int): DataFrame = {
       val bands = (0 until MdPerms / r).map { b =>
         concat_ws(":", (lit(b.toString) +:
@@ -1564,13 +1505,9 @@ object Dedup {
     // band join goes broadcast at fixture scale, so no AQE stage reuse)
     // PLUS a third evaluation inside the scan filter (the join keys'
     // inferred IsNotNull pushed below the project). Two longs per doc
-    // cached; memoPut rebuild-always discipline.
-    val sigs = hammingSigs(Tables.documents(s, d))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.memoPut(sweepSigMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + ":ham-sigs@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
-      sigs)
+    // cached; [[persistedLeaf]] rebuild-always discipline.
+    val sigs =
+      persistedLeaf(s, d, "ham-sigs")(hammingSigs(Tables.documents(s, d)))
     val bands = (0 until HamBands).map { k =>
       struct(lit(k.toLong).as("band_id"),
         shiftright(col("sig"), k * 8).bitwiseAND(255).as("bv"))

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
+import graft.Tables
 
 /** Statistics-aware broadcast hinting for iterative-state joins.
   *
@@ -22,6 +23,10 @@ import org.apache.spark.sql.functions.broadcast
   * bytes, because every caller's state row is a fixed narrow shape
   * (id + label / node + rank), so the row bound translates directly to a
   * build-side budget — see [[MaxBroadcastRows]] for the sizing rationale.
+  *
+  * Hints also holds the iterative family's checkpoint mode
+  * ([[checkpoint]]) and the session's shared-leaf registry ([[leaf]],
+  * [[rebuildLeaf]], [[evictAllMemos]]).
   */
 object Hints {
   /** Max state rows that still get a broadcast hint. Was 2M through
@@ -81,17 +86,18 @@ object Hints {
     dir match {
       case Some(p) =>
         // Consulted PER CALL, as documented: re-point the context when
-        // the conf value changes mid-session (the previous guard only
-        // set it when empty, silently ignoring a changed conf).
-        // getCheckpointDir returns the resolved URI (scheme-qualified),
-        // so compare the normalized Path URIs: only call setCheckpointDir
-        // when the configured path isn't the one already in effect. (A
-        // bare endsWith suffix match is wrong — 'ckpt' would spuriously
-        // match 'file:/tmp/my-ckpt' and skip the re-point.)
+        // the conf value changes mid-session. setCheckpointDir(p) puts
+        // the context in a fresh `p/<uuid>` child, so `p` is in effect
+        // iff the current directory's PARENT is `p` (qualified the same
+        // way); re-pointing on every call would make a uuid dir per call.
+        val want = {
+          val pp = new org.apache.hadoop.fs.Path(p)
+          pp.getFileSystem(s.sparkContext.hadoopConfiguration)
+            .makeQualified(pp).toUri.getPath
+        }
         val cur = s.sparkContext.getCheckpointDir
-        if (!cur.exists(c => c == p ||
-            new org.apache.hadoop.fs.Path(c).toUri.getPath ==
-              new org.apache.hadoop.fs.Path(p).toUri.getPath))
+        if (!cur.exists(c =>
+            new org.apache.hadoop.fs.Path(c).getParent.toUri.getPath == want))
           s.sparkContext.setCheckpointDir(p)
         df.checkpoint(eager)
       case None =>
@@ -135,80 +141,80 @@ object Hints {
       maxRows: Long = DimMaxBroadcastRows): DataFrame =
     if (rows >= 0 && rows <= maxRows) broadcast(df) else df.hint("SHUFFLE_HASH")
 
-  /** Shared-leaf memo maintenance for the session-scoped caches
-    * (Text.tokenLeaf, Dedup.labelMemo). Keys are
-    * `<scId>:<dir>@<fixture-fingerprint>`; a fixture REGENERATION
-    * changes only the fingerprint, so without eviction the superseded
-    * entry keeps its persisted/checkpointed DataFrame referenced for
-    * the session lifetime — leaked cache blocks on a long-lived
-    * session. On inserting a key, drop every entry with the same
-    * `<scId>:<dir>` prefix but a different fingerprint and unpersist
-    * its DataFrame (non-blocking; for checkpointed leaves the map
-    * removal is what makes the RDD blocks collectable). */
-  def memoInsert(memo: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      key: String, build: => DataFrame): DataFrame = {
-    val df = memo.computeIfAbsent(key, _ => build)
-    evictStale(memo, key)
+  /** The session's shared leaves: intermediate tables (token and n-gram
+    * streams, dedup labels and signatures, co-purchase pairs, PCA
+    * loadings, LM vocabulary tables) that one or more declared queries
+    * read instead of re-deriving. One entry per (SparkContext, data
+    * directory, tag); each entry remembers the fingerprint of the source
+    * table it was built from, so a fixture regeneration displaces the
+    * superseded leaf instead of serving it, and the displaced leaf is
+    * unpersisted (non-blocking; for checkpointed leaves dropping the
+    * entry is what makes the RDD blocks collectable). Storage (lazy
+    * persist or [[checkpoint]]) is chosen by the caller, as is who pays
+    * the build: consumers call [[leaf]], rebuild-always producers call
+    * [[rebuildLeaf]]. */
+  private final case class LeafKey(sc: Int, dir: String, tag: String)
+
+  /** Runs its build once, on first `df`, OUTSIDE the map's lock: a build
+    * may publish another leaf (Dedup's label leaf publishes the shingle-
+    * set leaf at corpus scale), which inside `compute` would be a
+    * recursive update of the same map. */
+  private final class Leaf(val fp: String, build: () => DataFrame) {
+    @volatile var built: DataFrame = _
+    lazy val df: DataFrame = { built = build(); built }
+  }
+
+  private val leaves = new java.util.concurrent.ConcurrentHashMap[LeafKey, Leaf]()
+
+  private def leafKey(s: SparkSession, d: String, tag: String): LeafKey =
+    LeafKey(System.identityHashCode(s.sparkContext), d, tag)
+
+  private def fingerprint(s: SparkSession, d: String, table: String): String =
+    Tables.pathFingerprint(s, s"$d/$table.parquet")
+
+  private def drop(old: Leaf, keep: DataFrame = null): Unit =
+    if (old != null && old.built != null && (old.built ne keep))
+      unpersistQuietly(old.built)
+
+  /** The leaf `tag` of directory `d`, built from `table`: the cached
+    * DataFrame while `table`'s fingerprint is unchanged, else `build`
+    * (run once, displacing and unpersisting the stale entry). */
+  def leaf(s: SparkSession, d: String, table: String, tag: String)(
+      build: => DataFrame): DataFrame = {
+    val fp = fingerprint(s, d, table)
+    var displaced: Leaf = null
+    val e = leaves.compute(leafKey(s, d, tag), (_, old) =>
+      if (old != null && old.fp == fp) old
+      else { displaced = old; new Leaf(fp, () => build) })
+    drop(displaced)
+    e.df
+  }
+
+  /** Publishes `df` as the leaf `tag` of directory `d`, displacing and
+    * unpersisting the previous entry; returns `df`. For producers that
+    * rebuild every construction so their own time keeps measuring the
+    * full derivation, while later consumers in the session hit the
+    * fresh leaf. */
+  def rebuildLeaf(s: SparkSession, d: String, table: String, tag: String)(
+      df: DataFrame): DataFrame = {
+    val e = new Leaf(fingerprint(s, d, table), () => df)
+    e.df // mark it built, so whatever displaces it unpersists it
+    drop(leaves.put(leafKey(s, d, tag), e), keep = df)
     df
-  }
-
-  /** [[memoInsert]]'s overwrite twin for callers that always REBUILD
-    * (Dedup.dedupClusters' honest-bench accounting): displaces the same
-    * key too, unpersisting the displaced leaf. */
-  def memoPut(memo: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      key: String, df: DataFrame): Unit = {
-    val old = memo.put(key, df)
-    if (old != null && (old ne df)) unpersistQuietly(old)
-    evictStale(memo, key)
-  }
-
-  private def evictStale(
-      memo: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      key: String): Unit = {
-    val at = key.lastIndexOf('@')
-    if (at > 0) {
-      val prefix = key.substring(0, at + 1)
-      val it = memo.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey != key && e.getKey.startsWith(prefix)) {
-          unpersistQuietly(e.getValue)
-          it.remove()
-        }
-      }
-    }
   }
 
   private def unpersistQuietly(df: DataFrame): Unit =
     try df.unpersist(blocking = false)
     catch { case _: Exception => () }
 
-  /** Registry of every session-scoped leaf memo (tokenLeaf, gramLeaf,
-    * labelMemo, sweepSigMemo register at module init), so measurement
-    * harnesses can drop ALL cached leaves between queries. Query paths
-    * never call this — eviction there stays per-key via [[memoInsert]]/
-    * [[memoPut]]. */
-  private val allMemos =
-    new java.util.concurrent.CopyOnWriteArrayList[
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  def registerMemo(
-      m: java.util.concurrent.ConcurrentHashMap[String, DataFrame])
-      : java.util.concurrent.ConcurrentHashMap[String, DataFrame] = {
-    allMemos.add(m); m
-  }
-
-  /** Unpersist and forget every memoized leaf. Used by graft.Headroom's
-    * ALL/ONLY sweeps between queries so each measurement starts from the
-    * cold-cache state a SOLO run would see: round 10 documented an
-    * in-sweep-vs-solo gap of up to ~1.6× (basket_pairs 43.1 vs 26.4 s at
-    * 100×, same day) caused by leaf-persisting neighbors holding
-    * executor memory — with eviction the sweep numbers are primary
-    * evidence, not conservative upper bounds. Memo removal is also what
-    * makes checkpointed leaves' RDD blocks collectable. */
+  /** Unpersist and forget every leaf. Used by graft.Headroom's ALL/ONLY
+    * sweeps between queries (and by perfbench before every pass) so each
+    * measurement starts from the cold-cache state a SOLO run would see:
+    * round 10 documented an in-sweep-vs-solo gap of up to ~1.6×
+    * (basket_pairs 43.1 vs 26.4 s at 100×, same day) caused by
+    * leaf-persisting neighbors holding executor memory — with eviction
+    * the sweep numbers are primary evidence, not conservative upper
+    * bounds. Query paths never call this. */
   def evictAllMemos(): Unit =
-    allMemos.forEach { m =>
-      m.values().forEach(df => unpersistQuietly(df))
-      m.clear()
-    }
+    leaves.keySet.forEach(k => drop(leaves.remove(k)))
 }

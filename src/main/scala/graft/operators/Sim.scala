@@ -1415,40 +1415,31 @@ object Sim {
       .orderBy(col("dim").asc)
   }
 
-  /** Session-scoped memo of the PCA loadings leaf — dims-sized (64
-    * rows), the "trained artifact" the projection query applies. Same
-    * discipline as Dedup.labelMemo / Analytics.supportedPairsMemo:
-    * q_emb_pca_power — the trainer — always REBUILDS and refreshes the
-    * memo (its bench time keeps measuring the full Gram build + power
-    * rounds honestly); q_emb_project consumes the shared leaf and pays
-    * only its own corpus-scale projection — the apply step's real
-    * marginal cost (in production the loadings are one materialized
-    * model every scorer broadcasts, not a pipeline each scorer
-    * re-trains). Keyed on the embeddings file fingerprint so a fixture
-    * regeneration invalidates instead of serving stale loadings. */
-  private val pcaMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  private def pcaKey(s: SparkSession, d: String): String =
-    System.identityHashCode(s.sparkContext) + ":" + d + "@" +
-      Tables.pathFingerprint(s, s"$d/embeddings.parquet")
-
+  /** The shared PCA loadings leaf — dims-sized (64 rows), the "trained
+    * artifact" the projection query applies. Same discipline as Dedup's
+    * label leaf and Analytics.supportedPairs: q_emb_pca_power — the
+    * trainer — always REBUILDS and republishes the leaf
+    * ([[Hints.rebuildLeaf]]; its bench time keeps measuring the full
+    * Gram build + power rounds honestly); q_emb_project consumes the
+    * shared leaf ([[Hints.leaf]]) and pays only its own corpus-scale
+    * projection — the apply step's real marginal cost (in production the
+    * loadings are one materialized model every scorer broadcasts, not a
+    * pipeline each scorer re-trains). Keyed on the embeddings file
+    * fingerprint so a fixture regeneration invalidates instead of
+    * serving stale loadings. */
   private def buildPcaLeaf(s: SparkSession, d: String): DataFrame =
     // LAZY leaf: the caller's first action materializes it (the
     // trainer's own count, or the scorer's broadcast build on a
-    // standalone miss). The labelMemo lazy-leaf race note does not
+    // standalone miss). The label leaf's lazy-leaf race note does not
     // apply — every consumer references the leaf exactly once (a
     // broadcast model join), never through a self-union.
     Hints.checkpoint(embPcaPower(s, d), eager = false)
 
-  private[graft] def pcaLoadingsRebuild(s: SparkSession, d: String): DataFrame = {
-    val leaf = buildPcaLeaf(s, d)
-    Hints.memoPut(pcaMemo, pcaKey(s, d), leaf)
-    leaf
-  }
+  private[graft] def pcaLoadingsRebuild(s: SparkSession, d: String): DataFrame =
+    Hints.rebuildLeaf(s, d, "embeddings", "pca")(buildPcaLeaf(s, d))
 
   private[graft] def pcaLoadings(s: SparkSession, d: String): DataFrame =
-    Hints.memoInsert(pcaMemo, pcaKey(s, d), buildPcaLeaf(s, d))
+    Hints.leaf(s, d, "embeddings", "pca")(buildPcaLeaf(s, d))
 
   /** Apply the learned PCA transform at corpus scale: project every
     * embedding onto [[embPcaPower]]'s dominant component — the map-only
@@ -1460,8 +1451,8 @@ object Sim {
     * floor-vs-truncate hazard on its sign. Oracle shares the power-
     * iteration CTE verbatim. */
   def embProject(s: SparkSession, d: String): DataFrame = {
-    // Round 15: the loadings come from the shared memo leaf (trainer
-    // rebuilds, scorer consumes — see [[pcaMemo]]); standalone runs
+    // Round 15: the loadings come from the shared leaf (trainer
+    // rebuilds, scorer consumes — see [[pcaLoadings]]); standalone runs
     // build it once on the miss.
     val v = pcaLoadings(s, d)
       .select(col("dim").cast("int").as("j"), col("loading_micro").as("lv"))
@@ -1476,7 +1467,7 @@ object Sim {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // rebuild-always accounting (the labelMemo convention): the trainer
+    // rebuild-always accounting (the label-leaf convention): the trainer
     // measures the full Gram + power rounds and refreshes the leaf
     "q_emb_pca_power" -> pcaLoadingsRebuild,
     "q_emb_project" -> embProject,

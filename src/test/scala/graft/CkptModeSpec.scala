@@ -46,6 +46,30 @@ class CkptModeSpec extends SparkSpec {
     }
   }
 
+  test("an unchanged spark.graft.checkpointDir keeps the context's checkpoint dir") {
+    // setCheckpointDir(p) makes a fresh p/<uuid> child each call, so a
+    // guard that compares against p itself re-points on every checkpoint.
+    val d = java.nio.file.Files.createTempDirectory("graft-ckpt-same").toString
+    try {
+      import spark.implicits._
+      spark.conf.set("spark.graft.checkpointDir", d)
+      operators.Hints.checkpoint(Seq(1, 2).toDF("v"), eager = true).count()
+      val first = spark.sparkContext.getCheckpointDir
+      operators.Hints.checkpoint(Seq(3, 4).toDF("v"), eager = true).count()
+      assert(spark.sparkContext.getCheckpointDir == first,
+        s"re-pointed from $first to ${spark.sparkContext.getCheckpointDir}")
+      val children = new java.io.File(d).listFiles().filter(_.isDirectory)
+      assert(children.length == 1,
+        s"expected one checkpoint dir under $d, got ${children.map(_.getName).toSeq}")
+    } finally {
+      spark.conf.unset("spark.graft.checkpointDir")
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(d)).iterator().asScala
+        .toSeq.sortBy(-_.getNameCount)
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+  }
+
   test("iterative family: identical results in local and reliable checkpoint modes") {
     val names = Seq("q_graph_pagerank", "q_graph_bfs", "q_dedup_clusters")
     val local = names.map(n => n -> collectSorted(n)).toMap

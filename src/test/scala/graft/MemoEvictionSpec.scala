@@ -1,19 +1,16 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Hints
 
-/** Pins the shared-leaf memo eviction contract (Hints.memoInsert /
-  * memoPut / evictStale): everything after the LAST '@' is the fixture
-  * fingerprint; eviction fires only for entries sharing the full
-  * pre-'@' prefix (session + dir + variant tag) with a DIFFERENT
-  * fingerprint. Regression test for the round-10 advice finding where
-  * Dedup's two sweepSigMemo variants appended their tag AFTER the
-  * fingerprint, so inserting one cross-evicted the other's
-  * still-current leaf. */
+/** Pins the shared-leaf registry contract (Hints.leaf / rebuildLeaf): one
+  * entry per (session, directory, tag); a changed source fingerprint or a
+  * rebuild displaces the entry and unpersists the displaced leaf; tags on
+  * one directory never evict each other; and a leaf's build may publish
+  * another leaf (Dedup's labels build publishes the shingle-set leaf at
+  * corpus scale). */
 class MemoEvictionSpec extends SparkSpec {
 
   private def df(n: Int): DataFrame = {
@@ -21,62 +18,89 @@ class MemoEvictionSpec extends SparkSpec {
     (0 until n).toDF("v")
   }
 
-  test("different variant tags under the same dir+fingerprint coexist") {
-    val memo = new ConcurrentHashMap[String, DataFrame]()
-    val a = df(1)
-    val b = df(2)
-    Hints.memoPut(memo, "sc1:/dir:incr-bkt@fpA", a)
-    Hints.memoPut(memo, "sc1:/dir:sweep-sigs@fpA", b)
-    assert(memo.containsKey("sc1:/dir:incr-bkt@fpA"),
-      "sweep-sigs insert must not evict the incr-bkt leaf")
-    assert(memo.containsKey("sc1:/dir:sweep-sigs@fpA"))
-    assert(memo.size() === 2)
+  private def cached(x: DataFrame): Boolean = x.storageLevel != StorageLevel.NONE
+
+  private def unbuilt: DataFrame = fail("expected a registry hit, not a build")
+
+  test("the same key returns the same leaf and builds once") {
+    var builds = 0
+    def get() = Hints.leaf(spark, sf0001, "documents", "spec-same") {
+      builds += 1; df(3)
+    }
+    val first = get()
+    assert(first eq get(), "same key must return the cached leaf")
+    assert(builds === 1)
   }
 
   test("same variant with a changed fingerprint evicts the stale entry") {
-    val memo = new ConcurrentHashMap[String, DataFrame]()
-    val stale = df(1).persist()
+    val dir = java.nio.file.Files.createTempDirectory("graft-leaf").toString
+    def write(n: Int): Unit =
+      df(n).write.mode("overwrite").parquet(s"$dir/t.parquet")
+    write(1)
+    val stale = Hints.leaf(spark, dir, "t", "spec-fp")(df(5).persist())
     stale.count()
-    Hints.memoPut(memo, "sc1:/dir:incr-bkt@fpOLD", stale)
-    Hints.memoPut(memo, "sc1:/dir:incr-bkt@fpNEW", df(2))
-    assert(!memo.containsKey("sc1:/dir:incr-bkt@fpOLD"),
-      "regenerated fixture must displace the superseded leaf")
-    assert(memo.containsKey("sc1:/dir:incr-bkt@fpNEW"))
-    assert(memo.size() === 1)
+    assert(cached(stale))
+    write(2)
+    val fresh = Hints.leaf(spark, dir, "t", "spec-fp")(df(6).persist())
+    assert(!(fresh eq stale), "regenerated table must rebuild the leaf")
+    assert(!cached(stale), "the superseded leaf must be unpersisted")
+    assert(Hints.leaf(spark, dir, "t", "spec-fp")(unbuilt) eq fresh)
+    Hints.evictAllMemos()
   }
 
-  test("memoInsert is idempotent for the same key and evicts stale twins") {
-    val memo = new ConcurrentHashMap[String, DataFrame]()
-    var builds = 0
-    def build(): DataFrame = { builds += 1; df(3) }
-    val first = Hints.memoInsert(memo, "sc1:/dir:tok#2@fpA", build())
-    // Second insert with an eagerly-evaluated arg still counts a build
-    // of the argument, so use the by-name path to check memo identity.
-    val second = Hints.memoInsert(memo, "sc1:/dir:tok#2@fpA", build())
-    assert(first eq second, "same key must return the cached leaf")
-    Hints.memoInsert(memo, "sc1:/dir:tok#2@fpB", df(4))
-    assert(!memo.containsKey("sc1:/dir:tok#2@fpA"))
-    assert(memo.containsKey("sc1:/dir:tok#2@fpB"))
+  test("different variant tags under the same dir+fingerprint coexist") {
+    val a = Hints.leaf(spark, sf0001, "documents", "spec-tag-a")(df(7).persist())
+    val b = Hints.rebuildLeaf(spark, sf0001, "documents", "spec-tag-b")(
+      df(8).persist())
+    assert(cached(a), "publishing tag b must not unpersist tag a")
+    assert(cached(b))
+    assert(Hints.leaf(spark, sf0001, "documents", "spec-tag-a")(unbuilt) eq a)
+    assert(Hints.leaf(spark, sf0001, "documents", "spec-tag-b")(unbuilt) eq b)
+    Hints.evictAllMemos()
+  }
+
+  test("a rebuild displaces and unpersists the previous leaf") {
+    val first = Hints.rebuildLeaf(spark, sf0001, "documents", "spec-rebuild")(
+      df(9).persist())
+    val second = Hints.rebuildLeaf(spark, sf0001, "documents", "spec-rebuild")(
+      df(10).persist())
+    assert(!cached(first), "the displaced leaf must be unpersisted")
+    assert(cached(second))
+    assert(Hints.leaf(spark, sf0001, "documents", "spec-rebuild")(unbuilt) eq second)
+    Hints.evictAllMemos()
+  }
+
+  test("a leaf build may publish other leaves (labels -> shingle sets)") {
+    // Enough nested publications to hit the outer key's bin or force a
+    // resize of the map: a build run inside the map's compute fails
+    // here with "Recursive update".
+    Hints.evictAllMemos()
+    val inner = (0 until 200).map(i => s"spec-inner-$i")
+    val x = df(11)
+    val outer = Hints.leaf(spark, sf0001, "documents", "spec-outer") {
+      inner.foreach(t => Hints.rebuildLeaf(spark, sf0001, "documents", t)(x))
+      df(12)
+    }
+    assert(Hints.leaf(spark, sf0001, "documents", "spec-outer")(unbuilt) eq outer)
+    inner.foreach(t =>
+      assert(Hints.leaf(spark, sf0001, "documents", t)(unbuilt) eq x, t))
+    Hints.evictAllMemos()
   }
 
   test("dedupIncr and dedupLshSweep leaves coexist in the live memo") {
-    // End-to-end: construct both queries against the same fixture; the
-    // round-10 bug made the second construction unpersist the first's
-    // leaf. Both keys must survive with their variant tags intact.
+    // Regression for the round-10 bug where the second construction
+    // unpersisted the first's still-current signature leaf.
+    Hints.evictAllMemos()
     val d = sf0001
-    graft.operators.Dedup.dedupIncr(spark, d)
-    graft.operators.Dedup.dedupLshSweep(spark, d)
-    val keys = {
-      val f = graft.operators.Dedup.getClass.getDeclaredFields
-        .find(_.getName.contains("sweepSigMemo")).get
-      f.setAccessible(true)
-      f.get(graft.operators.Dedup).asInstanceOf[ConcurrentHashMap[String, DataFrame]]
-        .keySet().toArray.map(_.toString).toSeq
-    }
-    val mine = keys.filter(_.contains(":" + d + ":"))
-    assert(mine.exists(k => k.contains(":incr-sigs@")),
-      s"incr-sigs leaf missing from memo: $keys")
-    assert(mine.exists(k => k.contains(":sweep-sigs@")),
-      s"sweep-sigs leaf evicted by the later construction: $keys")
+    val before = org.apache.spark.sql.CachedPlans.count(spark)
+    operators.Dedup.dedupIncr(spark, d)
+    operators.Dedup.dedupLshSweep(spark, d)
+    val docs = Tables.documents(spark, d)
+    assert(cached(operators.Dedup.minhashSignatures(docs, 2, 32)),
+      "dedupIncr's signature leaf is not cached")
+    assert(cached(operators.Dedup.minhashMd5Sigs(docs)),
+      "dedupLshSweep's construction evicted dedupIncr's leaf or its own")
+    assert(org.apache.spark.sql.CachedPlans.count(spark) === before + 2)
+    Hints.evictAllMemos()
   }
 }

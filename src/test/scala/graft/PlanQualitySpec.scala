@@ -858,7 +858,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(p.contains("ExistingRDD"),
       s"q_basket_lift must read the checkpointed supported-pairs leaf:\n$p")
     // rebuild-always accounting: q_graph_cc displaces the memo entry
-    // with a fresh leaf (the dedupClusters/labelMemo convention)
+    // with a fresh leaf (the dedupClusters label-leaf convention)
     SparkEntry.queries("q_graph_cc")(spark, sf0001).count()
     val c = Analytics.supportedPairs(spark, sf0001)
     assert(!(c eq a),

@@ -6,11 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the engine at one session builder and one extension install
-  * path: sessions are built only in Harness.scala (and Smoke.scala, which
-  * keeps a bare default session on purpose), and only GraftExtensions.scala
-  * touches the function registry or the experimental optimizer and planner
-  * hooks. */
+/** Keeps the engine at one session builder, one extension install path
+  * and one leaf registry: sessions are built only in Harness.scala (and
+  * Smoke.scala, which keeps a bare default session on purpose), only
+  * GraftExtensions.scala touches the function registry or the
+  * experimental optimizer and planner hooks, and only Hints.scala keys
+  * or holds shared leaves. */
 class SourceScanSpec extends AnyFunSuite {
 
   private def sources(root: String): Seq[Path] = {
@@ -42,5 +43,15 @@ class SourceScanSpec extends AnyFunSuite {
       Seq("functionRegistry", "experimental.extra"),
       Set("GraftExtensions.scala", "SourceScanSpec.scala"))
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("shared leaves are keyed and held only by the Hints registry") {
+    val keyed = offenders(Seq("src/main/scala"),
+      Seq("identityHashCode(", "ConcurrentHashMap[String, DataFrame]"),
+      Set("Hints.scala"))
+    assert(keyed.isEmpty, keyed.mkString("\n"))
+    val oldVerbs = offenders(Seq("src/main/scala", "src/test/scala"),
+      Seq("memoInsert", "memoPut", "registerMemo"), Set("SourceScanSpec.scala"))
+    assert(oldVerbs.isEmpty, oldVerbs.mkString("\n"))
   }
 }
